@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE JSON line for the driver:
   * `{"metric":"total","value":N,"unit":"sec","n":96,"queries":{...},"full":"BENCH_FULL.json","sf":...}`.
@@ -76,7 +75,7 @@ object Bench {
       // would corrupt the whole line the driver parses
       val safe = why.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
       // Locale.ROOT: a comma-decimal default locale would emit "220,72"
-      // and corrupt the JSON numbers (the fmt2 rationale in main)
+      // and corrupt the JSON numbers (see fmt2)
       def n(v: Double, digits: Int) = String.format(java.util.Locale.ROOT,
         s"%.${digits}f", Double.box(v))
       val committed = committedJson.flatMap(committedSummary).map {
@@ -235,10 +234,46 @@ object Bench {
   def cqueriesField(shown: Seq[String],
       committedMeds: Option[Map[String, Double]]): String =
     committedMeds.map { m =>
-      def n(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      val entries = shown.flatMap(k => m.get(k).map(v => "\"" + k + "\":" + n(v)))
+      val entries = shown.flatMap(k => m.get(k).map(v => "\"" + k + "\":" + fmt2(v)))
       if (entries.isEmpty) "" else s""","cqueries":{${entries.mkString(",")}}"""
     }.getOrElse("")
+
+  /** 2-decimal JSON number. Locale.ROOT: under a comma-decimal default
+    * locale f"%.2f" would emit "1,23" and break the JSON line.
+    */
+  private def fmt2(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+
+  /** The one stdout JSON line the driver parses from the last ~2000 chars
+    * of output. The query maps show the slowest queries first, up to a
+    * budget that leaves room for the sbt suffix: 1700 chars less the
+    * `extra` fields (adjudication, live total, calibration probe). Each
+    * shown query carries its median and its min (`"qmin"`, the
+    * load-robust figure regressions are adjudicated from) and, on a
+    * refused full-board run, its committed median in `"cqueries"` — all
+    * three are counted, and the `"cqueries"` total starts at its wrapper
+    * length. Pure — spec-tested in Round19OpsSpec.
+    */
+  def stdoutLine(headVal: Double, results: Seq[(String, (Double, Double))],
+      failed: Int, canary: (Double, Double), sfDir: String, extra: String,
+      committedMeds: Option[Map[String, Double]]): String = {
+    val budget = 1700 - extra.length
+    val sb = new StringBuilder
+    val sbMin = new StringBuilder
+    val shown = scala.collection.mutable.ArrayBuffer.empty[String]
+    var cqLen = if (committedMeds.isEmpty) 0 else ""","cqueries":{}""".length
+    results.sortBy(-_._2._1).foreach { case (k, (med, mn)) =>
+      val sep = if (shown.isEmpty) "" else ","
+      val entry = sep + "\"" + k + "\":" + fmt2(med)
+      val entryMin = sep + "\"" + k + "\":" + fmt2(mn)
+      val cLen = committedMeds.flatMap(_.get(k))
+        .map(v => sep.length + k.length + 3 + fmt2(v).length).getOrElse(0)
+      if (sb.length + sbMin.length + cqLen + entry.length + entryMin.length + cLen <= budget) {
+        sb.append(entry); sbMin.append(entryMin); shown += k; cqLen += cLen
+      }
+    }
+    s"""{"metric":"total","value":${fmt2(headVal)},"unit":"sec","n":${results.size + failed},"shown":${shown.size},"failed":$failed,"canary":[${fmt2(canary._1)},${fmt2(canary._2)}],"queries":{${sb.result()}},"qmin":{${sbMin.result()}},"full":"BENCH_FULL.json","sf":"$sfDir"$extra${cqueriesField(shown.toSeq, committedMeds)}}"""
+  }
 
   /** Which way out of a refusal streak: after K consecutive refusals the
     * operator must know whether the BOUND drifted (recalibrate) or the box
@@ -287,25 +322,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     // median-of-N per query. Default 3: rounds 1-5 all recorded contention
     // spikes (r5: q1 8.35 s vs 0.63 s idle median-of-3) that a judge had to
     // re-bench by hand; the median rejects those. Warmup below removes the
     // cold-start skew.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt.max(1)
-    val spark = Sessions.localBuilder(cpus)
-      // AQE on by default (the cluster-correct setting: runtime join
-      // selection, skew splits, partition coalescing); SPARK_GRAFT_AQE=false
-      // measures the low-latency local profile without per-stage replanning
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // MIN/MAX/COUNT answered from parquet footer stats (SURVEY §4's
-      // aggregate-pushdown nicety is a config flag in Spark 4, not code)
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.catalyst.GraftExtensions.register(spark)
+    val spark = Sessions.engine(cpus)
     // Warm the session (codegen compiler, shuffle machinery, broadcast infra)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
@@ -475,10 +498,7 @@ object Bench {
     // hand-checked refusals). ~1 s total, spent only on refused runs.
     val calib = refusal.map { _ =>
       val samples = (1 to 3).map(_ => canary())
-      val load = (try Some(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg")), "UTF-8"))
-        catch { case _: Throwable => None })
-        .flatMap(graft.tools.CalibrateCanary.loadavg1)
+      val load = graft.tools.CalibrateCanary.readLoad()
       // direct steal measurement (r18): the r17 refusal streak showed
       // loadavg blind to co-tenant steal, so the probe provokes demand
       // and reads /proc/stat's steal column + spinner cpu-share — the
@@ -498,38 +518,14 @@ object Bench {
     // driftVerdict note above).
     val (headVal, liveSwapped) = headline(refusal, total,
       if (only.isEmpty) committedJson.flatMap(committedSummary).map(_._1) else None)
-    // Stdout line: slowest-first, 2-decimal, capped so line + sbt suffix fit
-    // the driver's 2000-char tail with margin.
-    // Locale.ROOT: under a comma-decimal default locale f"%.2f" would emit
-    // "1,23" and break the JSON line.
-    def fmt2(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val liveField = liveSwapped.map(v => s""","live_total":${fmt2(v)}""").getOrElse("")
     // On a refused full-board run the shown queries ALSO carry the
     // committed quiet medians (see cqueriesField) — committed-to-committed
     // per-query comparison, same rationale as the headline swap.
     val cMeds = if (refusal.nonEmpty && only.isEmpty)
       committedJson.flatMap(committedBoard).map(_._1) else None
-    val budget = 1700 - adjudication.length - liveField.length - calib.length
-    // each shown query carries BOTH figures — "qmin" is the load-robust one
-    // the judge adjudicates regressions from (see the median/min note above)
-    val sb = new StringBuilder
-    val sbMin = new StringBuilder
-    val shownKeys = scala.collection.mutable.ArrayBuffer.empty[String]
-    var n = 0
-    results.sortBy(-_._2._1).foreach { case (k, (med, mn)) =>
-      val sep = if (n == 0) "" else ","
-      val entry = sep + "\"" + k + "\":" + fmt2(med)
-      val entryMin = sep + "\"" + k + "\":" + fmt2(mn)
-      // a shown query costs THREE entries on a refused line (med + min +
-      // committed med), two otherwise — budget for all of them
-      val cLen = cMeds.flatMap(_.get(k))
-        .map(v => sep.length + k.length + 3 + fmt2(v).length).getOrElse(0)
-      if (sb.length + sbMin.length + entry.length + entryMin.length + cLen <= budget) {
-        sb.append(entry); sbMin.append(entryMin); shownKeys += k; n += 1
-      }
-    }
-    val cq = cqueriesField(shownKeys.toSeq, cMeds)
-    println(s"""{"metric":"total","value":${fmt2(headVal)},"unit":"sec","n":${results.size + failed.size},"shown":$n,"failed":${failed.size},"canary":[${fmt2(canaryStart)},${fmt2(canaryEnd)}],"queries":{${sb.result()}},"qmin":{${sbMin.result()}},"full":"BENCH_FULL.json","sf":"$sfDir"$adjudication$liveField$calib$cq}""")
+    val liveField = liveSwapped.map(v => s""","live_total":${fmt2(v)}""").getOrElse("")
+    println(stdoutLine(headVal, results, failed.size, (canaryStart, canaryEnd),
+      sfDir, adjudication + liveField + calib, cMeds))
     spark.stop()
   }
 }

@@ -13,9 +13,11 @@ object Tables {
   /** Inferred-schema cache, keyed by (path, mtime, length) — the local
     * analog of reading through a catalog/metastore (at 100 TB a manifest-
     * backed table format supplies the schema; see the optimization guide
-    * §6 on avoiding per-query listing/footer work). Measured (ReadCost,
-    * sf0.1): a bare `spark.read.parquet` pays 42–71 ms of driver-side
-    * footer inference PER CALL; with the schema supplied it is 5–8 ms,
+    * §6 on avoiding per-query listing/footer work). Measured at sf0.1
+    * (driver-side time, outside every stage — tools/Probe shows it as the
+    * gap between a rep's wall and its stage walls): a bare
+    * `spark.read.parquet` pays 42–71 ms of driver-side footer inference
+    * PER CALL; with the schema supplied it is 5–8 ms,
     * and the file listing still happens fresh on every load — so data
     * rewritten under the same path is picked up (and the mtime/length in
     * the key drops the stale schema if a rewrite changes it, e.g. the
@@ -36,11 +38,19 @@ object Tables {
     val stamp = s"${f.lastModified}:${f.length}"
     // one entry PER PATH, replaced on rewrite — not appended (the r18
     // keyed-by-(path,stamp) map accumulated dead entries across the
-    // ScaleBench replica rewrites in long-lived sessions)
-    val cached = schemaCache.compute(path, (_, prev) =>
-      if (prev != null && prev._1 == stamp) prev
-      else (stamp, spark.read.parquet(path).schema))
-    spark.read.schema(cached._2).parquet(path)
+    // ScaleBench replica rewrites in long-lived sessions). Inference runs
+    // outside the map: inside compute() it held the bin lock, so loads
+    // whose keys share a bin waited on each other's footer reads. Two
+    // racing loads may both infer; either put is valid for its stamp.
+    val prev = schemaCache.get(path)
+    val schema =
+      if (prev != null && prev._1 == stamp) prev._2
+      else {
+        val inferred = spark.read.parquet(path).schema
+        schemaCache.put(path, (stamp, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Normalize `events.ts` to a micros TimestampType whatever the parquet

@@ -43,33 +43,49 @@ object PipelineApp {
         (tmp("root"), tmp("journal"), tmp("warehouse"))
       }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-pipeline")
-      // the reference's divideDataPartsQuantity (32-way fan-out) is, in
-      // Spark terms, the shuffle/write parallelism; env overrides config
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", cfg.ingest.fanOutParts.toString))
-      // CompressionHandlerConfig.compressionBufferSize: the engine's
-      // compression buffer is the shuffle codec block size
-      .config("spark.io.compression.lz4.blockSize",
-        s"${math.max(cfg.ingest.compressionBufferSize, 4096)}b")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = session(cfg)
     val journal = new TickerFileJournal(spark, journalDir)
     if (demo) runDemo(spark, journal, root, warehouseDir, cfg)
     else runContinuous(spark, journal, root, warehouseDir, cfg)
     spark.stop()
   }
 
+  /** The app's session: the engine profile (the same optimizer rules and
+    * planner strategies the board runs with — RollupRewrite included, so
+    * the rollups recovered at startup and refreshed on every commit are
+    * actually served) plus the app's own settings. `SPARK_MASTER` is the
+    * deployment's master URL. The reference's divideDataPartsQuantity
+    * (32-way fan-out) is, in Spark terms, the shuffle/write parallelism;
+    * SPARK_GRAFT_CPUS overrides the config. CompressionHandlerConfig
+    * .compressionBufferSize is the shuffle codec block size.
+    */
+  def session(cfg: GraftConfig): SparkSession =
+    graft.Sessions.engine(graft.Sessions.cpus, Seq(
+      "spark.app.name" -> "graft-pipeline",
+      "spark.sql.shuffle.partitions" ->
+        graft.Sessions.cpusOr(cfg.ingest.fanOutParts.toString),
+      "spark.io.compression.lz4.blockSize" ->
+        s"${math.max(cfg.ingest.compressionBufferSize, 4096)}b") ++
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _): _*)
+
   private def tmp(p: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-$p").toString
+
+  private val DocSchema = "doc_id LONG, text STRING"
+
+  /** A JSON-lines drop-dir stream. The file source lists eagerly, so the
+    * dir must exist before start — created through the dir's OWN Hadoop
+    * FileSystem, not java.io.File: the root may be hdfs:// (SCALE.md §7b),
+    * and a file:// drop dir may sit next to an hdfs:// warehouse.
+    */
+  private def dropDir(spark: SparkSession, dir: String, schema: String,
+      maxFilesPerTrigger: Int): org.apache.spark.sql.DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .json(dir)
+  }
 
   /** Flow 5 — corpus admission: documents dropped as JSON lines
     * (`doc_id`, `text`) under `docsDir` stream through
@@ -85,14 +101,7 @@ object PipelineApp {
   def corpusAdmission(spark: SparkSession, docsDir: String,
       warehouseDir: String, maxFilesPerTrigger: Int,
       trigger: Trigger): org.apache.spark.sql.streaming.StreamingQuery = {
-    // the file source lists eagerly: the drop dir must exist before start.
-    // Hadoop FS, not java.io.File — the root may be hdfs:// (SCALE.md §7b)
-    val p = new org.apache.hadoop.fs.Path(docsDir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
-    val docs = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(docsDir)
+    val docs = dropDir(spark, docsDir, DocSchema, maxFilesPerTrigger)
     // "_corpus", underscore-prefixed: the ticker warehouse shares this root,
     // and Spark's partition discovery over it must not see a batch_id=N tree
     // next to file_date=D dirs (a visible "corpus/" dir makes every
@@ -136,14 +145,7 @@ object PipelineApp {
       if (corpus.isEmpty) return None
       StreamingDrift.buildReference(corpus, refDir)
     }
-    // the drop dir's OWN FileSystem — it may not share the warehouse's
-    // (file:// drop dir next to an hdfs:// warehouse), like corpusAdmission
-    val p = new org.apache.hadoop.fs.Path(docsDir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
-    val docs = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(docsDir)
+    val docs = dropDir(spark, docsDir, DocSchema, maxFilesPerTrigger)
     Some(StreamingDrift.start(docs, refDir, s"$warehouseDir/_drift_log",
       s"$warehouseDir/_drift_ckpt", trigger))
   }
@@ -159,12 +161,8 @@ object PipelineApp {
   def vectorIndexer(spark: SparkSession, vecsDir: String, warehouseDir: String,
       maxFilesPerTrigger: Int,
       trigger: Trigger): org.apache.spark.sql.streaming.StreamingQuery = {
-    val p = new org.apache.hadoop.fs.Path(vecsDir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
-    val vecs = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<DOUBLE>")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(vecsDir)
+    val vecs = dropDir(spark, vecsDir, "vec_id LONG, embedding ARRAY<DOUBLE>",
+      maxFilesPerTrigger)
     StreamingVectorIndex.start(vecs, s"$warehouseDir/_vec_centroids",
       s"$warehouseDir/_vec_index", s"$warehouseDir/_vec_ckpt", trigger)
   }
@@ -178,12 +176,7 @@ object PipelineApp {
   def heavyHitterTracker(spark: SparkSession, docsDir: String,
       warehouseDir: String, maxFilesPerTrigger: Int,
       trigger: Trigger): org.apache.spark.sql.streaming.StreamingQuery = {
-    val p = new org.apache.hadoop.fs.Path(docsDir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
-    val docs = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(docsDir)
+    val docs = dropDir(spark, docsDir, DocSchema, maxFilesPerTrigger)
     StreamingTopK.start(docs, s"$warehouseDir/_hh_store",
       s"$warehouseDir/_hh_ckpt", trigger = trigger)
   }
@@ -197,12 +190,7 @@ object PipelineApp {
   def docLengthTracker(spark: SparkSession, docsDir: String,
       warehouseDir: String, maxFilesPerTrigger: Int,
       trigger: Trigger): org.apache.spark.sql.streaming.StreamingQuery = {
-    val p = new org.apache.hadoop.fs.Path(docsDir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
-    val docs = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(docsDir)
+    val docs = dropDir(spark, docsDir, DocSchema, maxFilesPerTrigger)
     StreamingQuantiles.start(
       docs.select(org.apache.spark.sql.functions.length(
         org.apache.spark.sql.functions.col("text")).cast("double").as("len")),
@@ -212,25 +200,48 @@ object PipelineApp {
 
   private def now(): Timestamp = new Timestamp(System.currentTimeMillis())
 
+  /** Startup recovery, run before anything claims or a stream starts;
+    * returns each step's repair count in order.
+    *  - orphans: files a dead predecessor left IN_PROGRESS go back to READY
+    *    (their staged-but-uncommitted data was never visible, so the
+    *    re-ingest is exactly-once — see LifecycleSpec);
+    *  - compactions, fpBuckets, vecCells: partitions, fingerprint buckets
+    *    and vector-index cells restored from an interrupted DirSwap (the
+    *    vector index's compaction is a stream-stopped maintenance tool, but
+    *    recovery always runs before the stream starts);
+    *  - rollups: persisted materialized rollups re-registered (the registry
+    *    is in-process; without this a restart silently stops every rollup
+    *    rewrite from firing until someone rebuilds by hand).
+    */
+  private def recover(spark: SparkSession, journal: TickerFileJournal,
+      warehouseDir: String): Seq[(String, Long)] = Seq(
+    "orphans" -> Lifecycle.recoverOrphaned(journal, now()),
+    "compactions" -> TickerIngest.recoverCompaction(spark, warehouseDir).toLong,
+    "fpBuckets" -> graft.operators.FingerprintStore
+      .recover(spark, s"$warehouseDir/_fp_store").toLong,
+    "vecCells" -> StreamingVectorIndex.recover(spark, s"$warehouseDir/_vec_index").toLong,
+    "rollups" -> graft.plans.MaterializedRollup
+      .recoverAll(spark, s"$warehouseDir/_rollups").toLong)
+
   /** One synchronous cycle of all four flows over a seeded fixture tree. */
   private def runDemo(spark: SparkSession, journal: TickerFileJournal,
       root: String, warehouseDir: String, cfg: GraftConfig): Unit = {
     val line = "AVA-USDT,1,0.61,15.2,0.62,100.0,0.60,80.5,2024-03-14T12:34:56.123"
     val today = LocalDate.now()
-    def put(date: LocalDate, name: String, lines: Seq[String]): Unit = {
-      new java.io.File(s"$root/$date").mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$root/$date/$name"), lines.mkString("\n").getBytes)
+    def put(path: String, lines: Seq[String]): Unit = {
+      new java.io.File(path).getParentFile.mkdirs()
+      java.nio.file.Files.write(java.nio.file.Paths.get(path), lines.mkString("\n").getBytes)
       ()
     }
-    put(today.minusDays(3), s"AVA-USDT_PST_${today.minusDays(3)}", Seq(line, line, line))
-    put(today.minusDays(2), s"BTC-USDT_PST_${today.minusDays(2)}", Seq(line, "MALFORMED,2"))
-    put(today, s"ETH-USDT_PST_$today", Seq(line))
+    val (d3, d2) = (today.minusDays(3), today.minusDays(2))
+    put(s"$root/$d3/AVA-USDT_PST_$d3", Seq(line, line, line))
+    put(s"$root/$d2/BTC-USDT_PST_$d2", Seq(line, "MALFORMED,2"))
+    put(s"$root/$today/ETH-USDT_PST_$today", Seq(line))
 
     // startup recovery (no-ops on a fresh fixture, but the demo exercises
-    // the same entry points continuous mode runs)
-    println(s"[demo] recovery: orphans=${Lifecycle.recoverOrphaned(journal, now())} " +
-      s"restoredPartitions=${TickerIngest.recoverCompaction(spark, warehouseDir)}")
+    // the same routine continuous mode runs)
+    println("[demo] recovery: " + recover(spark, journal, warehouseDir)
+      .map { case (what, n) => s"$what=$n" }.mkString(" "))
 
     // Flow 1 — one streaming discovery micro-batch
     val q = Discovery.stream(spark, journal, root, tmp("ckpt"),
@@ -253,13 +264,8 @@ object PipelineApp {
     // Flow 5 — corpus admission: two micro-batches with an in-batch dup, a
     // whitespace-variant dup, and a cross-batch historical dup
     val docsDir = s"$root/docs"
-    new java.io.File(docsDir).mkdirs()
-    def putDocs(name: String, docs: Seq[(Long, String)]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$docsDir/$name"),
-        docs.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }
-          .mkString("\n").getBytes)
-      ()
-    }
+    def putDocs(name: String, docs: Seq[(Long, String)]): Unit =
+      put(s"$docsDir/$name", docs.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" })
     putDocs("batch1.json", Seq(1L -> "alpha beta", 2L -> "gamma delta",
       3L -> "alpha  beta"))
     val dq = corpusAdmission(spark, docsDir, warehouseDir,
@@ -288,14 +294,9 @@ object PipelineApp {
     // Flow 7 — vector indexing: two drops; the first bootstraps the
     // quantizer, the second appends; a query probes the grown index
     val vecsDir = s"$root/vecs"
-    new java.io.File(vecsDir).mkdirs()
-    def putVecs(name: String, vecs: Seq[(Long, Seq[Double])]): Unit = {
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$vecsDir/$name"),
-        vecs.map { case (id, v) =>
-          s"""{"vec_id":$id,"embedding":[${v.mkString(",")}]}""" }
-          .mkString("\n").getBytes)
-      ()
-    }
+    def putVecs(name: String, vecs: Seq[(Long, Seq[Double])]): Unit =
+      put(s"$vecsDir/$name", vecs.map { case (id, v) =>
+        s"""{"vec_id":$id,"embedding":[${v.mkString(",")}]}""" })
     // Flow 8 — heavy hitters over everything dropped so far (3 batches)
     val hq = heavyHitterTracker(spark, docsDir, warehouseDir,
       maxFilesPerTrigger = 3, trigger = Trigger.ProcessingTime(0))
@@ -345,55 +346,30 @@ object PipelineApp {
     if (externalSink.nonEmpty)
       println(s"[app] external ClickHouse sink enabled: " +
         s"${cfg.database.host}:${cfg.database.port}/${cfg.database.database}")
-    // crash recovery before anything claims: files a dead predecessor left
-    // IN_PROGRESS go back to READY (their staged-but-uncommitted data was
-    // never visible, so the re-ingest is exactly-once — see LifecycleSpec)
-    val orphans = Lifecycle.recoverOrphaned(journal, now())
-    if (orphans > 0) println(s"[recover] re-queued $orphans orphaned IN_PROGRESS files")
-    val repaired = TickerIngest.recoverCompaction(spark, warehouseDir)
-    if (repaired > 0) println(s"[recover] restored $repaired partitions from interrupted compactions")
-    val fpRepaired = graft.operators.FingerprintStore.recover(spark, s"$warehouseDir/_fp_store")
-    if (fpRepaired > 0) println(s"[recover] restored $fpRepaired fingerprint buckets")
-    // the vector index shares the DirSwap crash windows (its compaction is
-    // a stream-stopped maintenance tool — see compactIndex's contract —
-    // but recovery always runs before the stream starts)
-    val vecRepaired = StreamingVectorIndex.recover(spark, s"$warehouseDir/_vec_index")
-    if (vecRepaired > 0) println(s"[recover] restored $vecRepaired vector-index cells")
-    // re-register persisted materialized rollups (the registry is
-    // in-process; without this a restart silently stops every rollup
-    // rewrite from firing until someone rebuilds by hand)
-    val rollups = graft.plans.MaterializedRollup
-      .recoverAll(spark, s"$warehouseDir/_rollups")
-    if (rollups > 0) println(s"[recover] re-registered $rollups materialized rollups")
+    recover(spark, journal, warehouseDir).foreach { case (what, n) =>
+      if (n > 0) println(s"[recover] $what=$n")
+    }
     // observe-mode advisor: accumulates servable aggregate shapes; advice
     // is logged on the cleanup cadence below
     graft.plans.RollupAdvisor.install(spark)
     Discovery.catchUp(spark, journal, root, LocalDate.now(), now())
+    // every stream runs on discovery's cadence and batch cap
+    val files = cfg.discovery.filesBufferSize
+    val trig = Trigger.ProcessingTime(s"${cfg.discovery.flushTimeoutSec} seconds")
     val q = Discovery.stream(spark, journal, root, s"$warehouseDir/_discovery_ckpt",
-      maxFilesPerTrigger = cfg.discovery.filesBufferSize,
-      trigger = Trigger.ProcessingTime(s"${cfg.discovery.flushTimeoutSec} seconds"))
-    // Flow 5 — corpus admission runs beside discovery on the same cadence
-    val corpusQ = corpusAdmission(spark, s"$root/docs", warehouseDir,
-      maxFilesPerTrigger = cfg.discovery.filesBufferSize,
-      trigger = Trigger.ProcessingTime(s"${cfg.discovery.flushTimeoutSec} seconds"))
+      maxFilesPerTrigger = files, trigger = trig)
+    // Flow 5 — corpus admission runs beside discovery
+    val corpusQ = corpusAdmission(spark, s"$root/docs", warehouseDir, files, trig)
     // Flow 6 — drift monitor over the same drop dir (None on cold start:
     // the baseline is the admitted corpus, which doesn't exist yet)
-    val driftQ = driftMonitor(spark, s"$root/docs", warehouseDir,
-      maxFilesPerTrigger = cfg.discovery.filesBufferSize,
-      trigger = Trigger.ProcessingTime(s"${cfg.discovery.flushTimeoutSec} seconds"))
+    val driftQ = driftMonitor(spark, s"$root/docs", warehouseDir, files, trig)
     // Flow 7 — vector indexing from the embeddings drop dir (first batch
     // bootstraps the quantizer)
-    val vecQ = vectorIndexer(spark, s"$root/vecs", warehouseDir,
-      maxFilesPerTrigger = cfg.discovery.filesBufferSize,
-      trigger = Trigger.ProcessingTime(s"${cfg.discovery.flushTimeoutSec} seconds"))
+    val vecQ = vectorIndexer(spark, s"$root/vecs", warehouseDir, files, trig)
     // Flow 8 — heavy-hitter tracking over the same docs drop dir
-    val hhQ = heavyHitterTracker(spark, s"$root/docs", warehouseDir,
-      maxFilesPerTrigger = cfg.discovery.filesBufferSize,
-      trigger = Trigger.ProcessingTime(s"${cfg.discovery.flushTimeoutSec} seconds"))
+    val hhQ = heavyHitterTracker(spark, s"$root/docs", warehouseDir, files, trig)
     // Flow 9 — doc-length quantile tracking over the same docs drop dir
-    val lenQ = docLengthTracker(spark, s"$root/docs", warehouseDir,
-      maxFilesPerTrigger = cfg.discovery.filesBufferSize,
-      trigger = Trigger.ProcessingTime(s"${cfg.discovery.flushTimeoutSec} seconds"))
+    val lenQ = docLengthTracker(spark, s"$root/docs", warehouseDir, files, trig)
     // one thread per flow: with only 2 threads a stuck uploadData cycle
     // (retry sleeps can be seconds per attempt) plus proceedStatus would
     // starve cleanup arbitrarily long

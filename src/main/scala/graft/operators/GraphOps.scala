@@ -41,7 +41,7 @@ object GraphOps {
     * longs in the hot path — `2k` for customer k, `2k+1` for supplier k, so
     * the key spaces cannot collide and the distinct/shuffle/checkpoint all
     * move 8-byte keys instead of `c…`/`s…` strings (the strings cost ~2×
-    * on the edge materialization, measured via ProfileTool). [[label]]
+    * on the edge materialization; reproduce with tools/Probe). [[label]]
     * renders the public `c…`/`s…` form in final projections only.
     */
   def edges(s: SparkSession, d: String): DataFrame = {
@@ -210,9 +210,9 @@ object GraphOps {
     * count from it, so one scan + one shuffle feed all three).
     */
   private[graft] def partSets(s: SparkSession, d: String): DataFrame =
-    // KEPT NARROW (r19, measured): StageCost showed the set build and the
-    // downstream pair explode running 3-4 wide (scan splits / AQE
-    // coalescing), so an explicit repartition(width, l_orderkey) was
+    // KEPT NARROW (r19, measured): tools/Probe's stage table shows the set
+    // build and the downstream pair explode running 3-4 wide (scan splits /
+    // AQE coalescing), so an explicit repartition(width, l_orderkey) was
     // A/B'd to widen both — and measured flat-to-WORSE on every consumer
     // (x_bfs_hops 3.74 -> 4.01 med, x_triangles ~2.9 -> 3.19,
     // g_pair_lift flat): the extra raw-row exchange + the lost map-side

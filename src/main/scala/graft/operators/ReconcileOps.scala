@@ -266,7 +266,7 @@ object ReconcileOps {
         col(c).cast("double").as("vn"), lit(null).cast("string").as("vs"))) ++
         strCols.map { case (c, v) => struct(lit(c).as("col_name"),
           lit(null).cast("double").as("vn"), v.as("vs")) }
-    // fanOut before the 9x melt (r19, StageCost): the single-file scan
+    // fanOut before the 9x melt (r19, tools/Probe): the single-file scan
     // arrives as 3 input splits, so the explode + partial NDV aggregation
     // over 5.4M melted rows ran 3-wide (1.48 s of the query's 1.76 s
     // wall); the row-sized repartition is metadata next to that and a

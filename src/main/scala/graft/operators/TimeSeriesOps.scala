@@ -651,7 +651,7 @@ object TimeSeriesOps {
       .limit(PairCorrUniverse)
       .select("user_id")
     // universe×days-sized (bounded) — checkpoint once, feed both join
-    // sides. WIDEN first (r19, measured via tools/StageCost): the
+    // sides. WIDEN first (r19, measured via tools/Probe): the
     // groupBy+window upstream leaves this ~40k-row frame in ONE
     // AQE-coalesced partition, and the checkpoint freezes that, so the
     // day-join's ~14.6M-row pair expansion + six DECIMAL moment sums ran

@@ -1661,7 +1661,7 @@ object AnalyticsQueries {
     // the when() guard is semantically a no-op (the join admits only
     // dj > di) but keeps the ANSI-mode division from being evaluated
     // speculatively for non-matching pairs inside the join's codegen.
-    // WIDEN the streaming side first (r19, StageCost): the day aggregate
+    // WIDEN the streaming side first (r19, tools/Probe): the day aggregate
     // lands in one AQE-coalesced partition, so the O(D²) pair expansion
     // ran as a single 1.2 s task (the broadcast side is unaffected) —
     // one CPU-dense expansion amortizes the extra tasks, same rationale
@@ -2305,7 +2305,7 @@ object AnalyticsQueries {
       col("l_returnflag").as("g"),
       col("l_quantity").cast("long").as("x"),
       (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long").as("y"))
-    // keyed repartition BEFORE the cell aggregation (r19, StageCost): the
+    // keyed repartition BEFORE the cell aggregation (r19, tools/Probe): the
     // joint (g, x, y) cells are near-unique (599,881 of 600,000 rows), so
     // map-side partial aggregation compressed nothing while the scan's 3
     // input splits ran the whole cell-build 3-wide (0.8 s single-stage).

@@ -152,7 +152,7 @@ object BoxCanary {
     * SPARK_GRAFT_CANARY_COOLDOWN_S tunes the retry (0 disables it).
     */
   def requireQuiet(spark: SparkSession, tool: String): Double = {
-    val bound = boundFromArtifact(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+    val bound = boundFromArtifact(graft.Sessions.gateCpus,
       sys.env.get("SPARK_GRAFT_CANARY_BOUND"))
     val warmed = warmUntil(spark, bound)
     if (warmed > 1)

@@ -33,6 +33,12 @@ object CalibrateCanary {
   def loadavg1(procLine: String): Option[Double] =
     procLine.trim.split("\\s+").headOption.flatMap(_.toDoubleOption)
 
+  /** The box's 1-min load average now; None when unreadable. */
+  def readLoad(): Option[Double] =
+    try Some(new String(Files.readAllBytes(Paths.get("/proc/loadavg")), "UTF-8"))
+      .flatMap(loadavg1)
+    catch { case _: Throwable => None }
+
   /** The artifact body. Pure — spec-tested: round-trips through
     * [[BoxCanary.parseCalibration]], carries the evidence fields
     * (samples, load, date, cpus) a re-stamp review needs.
@@ -101,7 +107,7 @@ object CalibrateCanary {
         "genuine hardware change.")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Sessions.gateCpus
     val maxLoad = sys.env.get("SPARK_GRAFT_CALIB_MAXLOAD")
       .flatMap(_.toDoubleOption).getOrElse(0.15)
     val margin = sys.env.get("SPARK_GRAFT_CALIB_MARGIN")
@@ -118,9 +124,6 @@ object CalibrateCanary {
     // attempt at loadavg 0.21–0.24 read samples 0.128–0.164 against the
     // 0.108–0.132 band deep-idle gates actually see — upward-biased
     // samples stamp a bound loose enough to certify loaded boxes.
-    def readLoad(): Option[Double] =
-      try Some(new String(Files.readAllBytes(Paths.get("/proc/loadavg")), "UTF-8"))
-        .flatMap(loadavg1) catch { case _: Throwable => None }
     var load = readLoad()
     if (load.isEmpty)
       System.err.println("[calibrate] /proc/loadavg unreadable — skipping " +
@@ -153,8 +156,7 @@ object CalibrateCanary {
             "(SPARK_GRAFT_CALIB_SKIP_STEAL=1 skips this probe).")
       }
 
-    val spark = graft.Sessions.localBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus)
     // THREE warm measure() calls (9 runs), not the gates' one: this canary
     // is the JVM's very first Spark work, and C2 maturation alone decays
     // readings 0.173 → 0.116 over the first ~12 runs (measured) — the

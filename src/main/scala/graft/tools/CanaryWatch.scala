@@ -27,20 +27,16 @@ object CanaryWatch {
   def main(args: Array[String]): Unit = {
     val rounds = args.headOption.flatMap(_.toIntOption).getOrElse(12)
     val gapMs = if (args.length > 1) args(1).toLong else 4000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Sessions.gateCpus
     val bound = BoxCanary.boundFromArtifact(cpus, sys.env.get("SPARK_GRAFT_CANARY_BOUND"))
-    val spark = graft.Sessions.localBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus)
     try {
       BoxCanary.measure(spark) // warm the range/codegen path once, as the gates do
       println(f"[canarywatch] bound $bound%.3f s; $rounds rounds, gap ${gapMs}ms")
       (1 to rounds).foreach { i =>
         val c = BoxCanary.measure(spark)
         val p = StealProbe.probe()
-        val load = (try Some(new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get("/proc/loadavg")), "UTF-8"))
-          catch { case _: Throwable => None })
-          .flatMap(CalibrateCanary.loadavg1)
+        val load = CalibrateCanary.readLoad()
         val mark = if (c > bound) "OVER" else "ok"
         println(f"[canarywatch] $i%3d canary $c%.3f s  steal " +
           p.stealFrac.map(s => f"$s%.3f").getOrElse("  n/a") +

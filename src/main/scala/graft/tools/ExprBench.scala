@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.catalyst.HashFunctions
@@ -18,16 +18,7 @@ object ExprBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.engine(graft.Sessions.cpus)
 
     def bench(tag: String)(df: => DataFrame): Double = {
       df.write.format("noop").mode("overwrite").save() // warm
@@ -195,24 +186,12 @@ object ExprBench {
     // single-JVM shuffle is cheap and the sketch build is an extra pass);
     // the figure that scales is the TOTAL SHUFFLE RECORD count — the exact
     // path shuffles the full token stream onto the token key, the CMS path
-    // shuffles only the per-doc rollup. Counted with a task-metrics
-    // listener, not plan metrics: both paths localCheckpoint intermediate
-    // frames, whose internal exchanges a plan walk cannot see.
-    def totalShuffleRecords(df: => DataFrame): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) { acc.addAndGet(m.shuffleWriteMetrics.recordsWritten); () }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        df.write.format("noop").mode("overwrite").save()
-        Thread.sleep(300) // listener bus drains asynchronously
-      } finally spark.sparkContext.removeSparkListener(listener)
-      acc.get()
-    }
+    // shuffles only the per-doc rollup. Counted by the shared Recorder,
+    // not plan metrics: both paths localCheckpoint intermediate frames,
+    // whose internal exchanges a plan walk cannot see.
+    def totalShuffleRecords(df: => DataFrame): Long =
+      Recorder.record(spark)(df.write.format("noop").mode("overwrite").save())
+        ._2.shuffleRecords
     val tExact = bench("dsir_exact") { graft.queries.PipelineQueries.dsirSelect(spark, sfDir) }
     val tCms = bench("dsir_cms") { graft.queries.PipelineQueries.dsirSelectCms(spark, sfDir) }
     val (rExact, rCms) = (

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import graft.ingest.TickerIngest
 
 /** Ingest micro-bench (BASELINE.md "ingest micro-bench"): generate ticker
@@ -17,20 +16,8 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val totalRows = args.headOption.map(_.toInt).getOrElse(2_000_000)
     val nFiles = args.lift(1).map(_.toInt).getOrElse(32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // CSV splits are byte-ranged: size them so the parse fans out across
-      // all cores instead of packing every small file into one 128 MB split
-      // (spark.sql.files.maxPartitionBytes is THE local-ingest throughput
-      // knob; at cluster scale the default is right for large files)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus,
+      StreamIngestBench.IngestSplits: _*)
 
     val root = java.nio.file.Files.createTempDirectory("ingest-bench").toString
     val wh = java.nio.file.Files.createTempDirectory("ingest-wh").toString

@@ -54,26 +54,13 @@ object ScaleBench {
     val outRoot = if (args.length > 2) args(2) else "/tmp/graft_scale"
     val queries = if (args.length > 3) args(3).split(",").toSeq else DefaultQueries
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt.max(1)
-    val spark = session()
+    val spark = graft.Sessions.engine(graft.Sessions.gateCpus)
     val rows = measure(spark, sfDir, factor, outRoot, queries, reps)
     // one machine-readable line for the round artifacts
     println("{" + rows.map { r =>
       f""""${r.name}":{"t1":${r.t1}%.3f,"tk":${r.tk}%.3f,"ratio":${r.ratio}%.3f,"exp":${r.exp}%.3f,"rec1":${r.rec1},"recK":${r.recK},"rec_exp":${r.recExp}%.3f}"""
     }.mkString(",") + s""","factor":$factor}""")
     spark.stop()
-  }
-
-  def session(): SparkSession = {
-    val spark = graft.Sessions.localBuilder(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.catalyst.GraftExtensions.register(spark)
-    spark
   }
 
   /** The two-point measurement, reusable by [[ScaleGate]]: builds (or
@@ -124,8 +111,11 @@ object ScaleBench {
     buildScaled(spark, sfDir, scaled, factor)
 
     // shuffle records are counted on the WARM run (free: it executes
-    // anyway) with a task-metrics listener — the ExprBench discipline,
-    // which also sees exchanges hidden inside localCheckpoints.
+    // anyway) by the shared Recorder, which also sees exchanges hidden
+    // inside localCheckpoints and drains the listener bus before the
+    // count is read — stragglers missed on a loaded box would undercount
+    // rec1/recK, which can fake a floor exemption or mask a super-linear
+    // shuffle in ScaleGate.
     // The warm phase then CONTINUES until run-to-run improvement drops
     // under warmTol (see warmStable) before anything is measured: a
     // single warm run left the min-of-reps on the JIT decay slope for
@@ -137,30 +127,15 @@ object ScaleBench {
     // Like BoxCanary.warmUntil this cannot loosen the gate: bounds are
     // untouched, only the cold-JVM artifact is excluded from the sample.
     def bench(fn: (SparkSession, String) => DataFrame, dir: String): (Double, Long) = {
-      val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) { acc.addAndGet(m.shuffleWriteMetrics.recordsWritten); () }
-        }
-      }
       def run(): Double = {
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      spark.sparkContext.addSparkListener(listener)
-      val firstWarm = try {
-        val t = run() // warm + record count
-        // drain DETERMINISTICALLY, not with a fixed sleep: stragglers
-        // missed on a loaded box undercount rec1/recK, which can fake a
-        // floor exemption or mask a super-linear shuffle in ScaleGate
-        org.apache.spark.graft.SparkInternals.drainListenerBus(spark.sparkContext)
-        t
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (firstWarm, rec) = Recorder.record(spark)(run()) // warm + record count
       warmStable(firstWarm)(run _)
       val t = (1 to reps).map(_ => run()).min
-      (t, acc.get())
+      (t, rec.shuffleRecords)
     }
 
     println(f"${"query"}%-20s ${"t_1x_s"}%8s ${s"t_${factor}x_s"}%8s ${"ratio"}%7s ${"exponent"}%8s ${"rec_1x"}%10s ${s"rec_${factor}x"}%10s ${"rec_exp"}%8s")

@@ -172,7 +172,7 @@ object ScaleGate {
     val bounds = parseBounds(
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(boundsPath)), "UTF-8"))
-    val spark = ScaleBench.session()
+    val spark = graft.Sessions.engine(graft.Sessions.gateCpus)
     // the record exponents are load-immune, but the WALL exponents are
     // not: abort on a loaded box (one cooldown retry, distinct verdict)
     // instead of recording a phantom super-linearity, and stamp the quiet

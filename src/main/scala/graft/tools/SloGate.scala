@@ -81,12 +81,8 @@ object SloGate {
     val boundsPath = args.headOption.getOrElse("SLO_BOUNDS.json")
     val bounds = parseBounds(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(boundsPath)), "UTF-8"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.localBuilder(cpus)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Sessions.gateCpus
+    val spark = graft.Sessions.local(cpus, StreamIngestBench.IngestSplits: _*)
     // a loaded box ABORTS here (distinct verdict, one cooldown retry)
     // instead of recording a phantom p99 regression; the quiet canary is
     // printed with the verdict so the artifact carries its box evidence.

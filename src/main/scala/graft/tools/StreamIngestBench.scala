@@ -32,6 +32,16 @@ import graft.streaming.StreamingAnalytics
   */
 object StreamIngestBench {
 
+  /** The ingest benches' CSV split sizes. Splits are byte-ranged: size them
+    * so the parse fans out across all cores instead of packing every small
+    * file into one 128 MB split (spark.sql.files.maxPartitionBytes is THE
+    * local-ingest throughput knob; at cluster scale the default is right
+    * for large files).
+    */
+  val IngestSplits: Seq[(String, String)] = Seq(
+    "spark.sql.files.maxPartitionBytes" -> "4m",
+    "spark.sql.files.openCostInBytes" -> "1m")
+
   /** Per-wave latency: for wave i (0-based), the first progress event
     * whose cumulative row count covers `base + (i+1)·rowsPerWave`, minus
     * the wave's publish instant. Pure — spec-tested. `events` are
@@ -184,12 +194,7 @@ object StreamIngestBench {
     val latWaves = args.lift(2).map(_.toInt).getOrElse(80)
     val latIntervalMs = args.lift(3).map(_.toLong).getOrElse(250L)
     val latOfferedRps = args.lift(4).map(_.toLong).getOrElse(300_000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.localBuilder(cpus)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cpus, IngestSplits: _*)
 
     val root = java.nio.file.Files.createTempDirectory("stream-bench").toString
     val rowsPerFile = totalRows / nFiles

@@ -43,6 +43,28 @@ class Round19OpsSpec extends AnyFunSuite with SparkSpec {
     assert(m == Map("x_kcore" -> 2.43, "q1_pricing" -> 0.61))
   }
 
+  test("stdoutLine: a refused full board with committed medians fits the driver's tail") {
+    // every shown query costs three entries on a refused line (median,
+    // min, committed median) plus the cqueries wrapper; the budget must
+    // count all of them for every accepted key, not only the current one
+    val board = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("BENCH_FULL.json")), "UTF-8")
+    val meds = Bench.boardMap(board, "queries")
+    assert(meds.size == 277)
+    val live = meds.toSeq.map { case (k, v) => k -> ((v * 2, v)) }
+    val extra = Bench.adjudicationFields(Some("canary out of bounds " * 10), Some(board)) +
+      ""","live_total":355.12""" +
+      Bench.calibFields(Some(0.09), Seq(0.24, 0.25, 0.26), 0.142, Some(0.31), Some(0.97))
+    val line = Bench.stdoutLine(169.81, live, 0, (0.31, 0.29), "/root/testdata/sf0.1",
+      extra, Some(meds))
+    // sbt appends its "[success] Total time: ..." line (~80 chars)
+    assert(line.length <= 2000 - 80, s"${line.length} chars")
+    val shown = Bench.boardMap(line, "queries").keySet
+    assert(shown.size > 10)
+    assert(Bench.boardMap(line, "qmin").keySet == shown)
+    assert(Bench.boardMap(line, "cqueries").keySet == shown)
+  }
+
   // ---- Tables schema cache ----
 
   test("schema cache replaces a path's entry on rewrite and serves the new schema") {
